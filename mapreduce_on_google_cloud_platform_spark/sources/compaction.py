@@ -25,6 +25,8 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .tables import read_parquet
+
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 
 
@@ -48,7 +50,7 @@ def compact(
     ``dst_path``; returns the file count.  With ``sort_col``, rows are
     range-partitioned and sorted so each output file covers a disjoint key
     range (selective min/max pruning for later scans filtering that key)."""
-    df = spark.read.parquet(src_path)
+    df = read_parquet(spark, src_path)
     n_files = max(1, math.ceil(table_bytes(spark, src_path) / target_bytes))
     if sort_col:
         df = df.repartitionByRange(n_files, sort_col).sortWithinPartitions(sort_col)

@@ -34,11 +34,12 @@ path, which forces a rebuild.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .tables import path_fingerprint, read_parquet
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -48,27 +49,6 @@ def _store_root() -> str:
         "SPARK_GRAFT_INDEX_DIR",
         os.path.join(_REPO_ROOT, "spark-warehouse", "index_store"),
     )
-
-
-def _dataset_fingerprint(sf_dir: str) -> str:
-    """Stable token for the dataset's current contents: (relative path,
-    size, mtime_ns) of every file under sf_dir -- RECURSIVELY, so a
-    directory-layout table (e.g. a partitioned ``events.parquet/`` dir)
-    can't serve a stale index after only its inner part-files change
-    (VERDICT r10 item #5) -- hashed.  Regeneration by the round driver
-    changes mtimes, so stale indexes become unreachable."""
-    h = hashlib.md5()
-    try:
-        for root, dirs, files in os.walk(sf_dir):
-            dirs.sort()  # deterministic walk order
-            rel_root = os.path.relpath(root, sf_dir)
-            for fn in sorted(files):
-                st = os.stat(os.path.join(root, fn))
-                rel = fn if rel_root == "." else os.path.join(rel_root, fn)
-                h.update(f"{rel}:{st.st_size}:{st.st_mtime_ns};".encode())
-    except OSError:
-        pass  # nonexistent sf_dir: the builder's scan will raise cleanly
-    return h.hexdigest()[:12]
 
 
 # Physical-layout generation, part of every index path: bumped whenever
@@ -97,7 +77,7 @@ _FILE_TARGET_BYTES = int(
 
 def index_path(sf_dir: str, name: str, version: str) -> str:
     tag = os.path.basename(os.path.normpath(sf_dir))
-    fp = _dataset_fingerprint(sf_dir)
+    fp = path_fingerprint(sf_dir)
     return os.path.join(
         _store_root(), f"{tag}-{fp}", f"{name}.{version}-{_LAYOUT_GEN}"
     )
@@ -151,36 +131,43 @@ def materialized(
         # separately in index_build_sec as always; values are unaffected
         # (every consumer is pinned order-independent by the two-layout
         # stability sweeps).
-        build(spark, sf_dir).write.mode("overwrite").parquet(stage)
-        n_files = max(
-            1,
-            min(
-                default_parallelism(),
-                -(-_dir_bytes(stage) // _FILE_TARGET_BYTES),
-            ),
-        )
-        n_staged = sum(
-            1 for f in os.listdir(stage) if f.startswith("part-")
-        )
-        if n_staged == n_files:
-            # the natural build layout already matches the policy (most
-            # small tables: one AQE-coalesced output file) -- promote the
-            # staged copy and skip the second write entirely
-            tmp, stage = stage, None
-        else:
-            spark.read.parquet(stage).repartition(n_files).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            shutil.rmtree(stage, ignore_errors=True)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
+        # A raising builder or writer must not strand its half-written
+        # stage/tmp copy in the persistent store: both go in ``finally``
+        # (after a successful rename ``tmp`` no longer exists).
         try:
-            os.rename(tmp, path)
-        except OSError:
-            # a concurrent builder won the rename race; both copies are
-            # deterministic functions of the same input -- discard ours
+            build(spark, sf_dir).write.mode("overwrite").parquet(stage)
+            n_files = max(
+                1,
+                min(
+                    default_parallelism(),
+                    -(-_dir_bytes(stage) // _FILE_TARGET_BYTES),
+                ),
+            )
+            n_staged = sum(
+                1 for f in os.listdir(stage) if f.startswith("part-")
+            )
+            if n_staged == n_files:
+                # the natural build layout already matches the policy
+                # (most small tables: one AQE-coalesced output file) --
+                # promote the staged copy and skip the second write
+                tmp = stage
+            else:
+                read_parquet(spark, stage).repartition(n_files).write.mode(
+                    "overwrite"
+                ).parquet(tmp)
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            try:
+                os.rename(tmp, path)
+            except OSError:
+                # a concurrent builder won the rename race; both copies
+                # are deterministic functions of the same input -- ours
+                # is discarded below
+                pass
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
             shutil.rmtree(tmp, ignore_errors=True)
         _BUILD_LOG.append(path)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def drop_index(sf_dir: str, name: str, version: str) -> None:

@@ -41,6 +41,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .tables import load_table, read_parquet
+
 
 def write_partitioned(
     df: DataFrame, path: str, partition_cols: Sequence[str]
@@ -61,7 +63,7 @@ def write_partitioned(
 def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
     """Read a partitioned layout (partition columns come back as real
     columns, typed by partition-dir discovery)."""
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def overwrite_partitions_dynamic(
@@ -118,7 +120,7 @@ def compact_partitions(
     partition, independent of how fragmented the input was.  Data is
     byte-preserved (pure read -> reshuffle -> write; no dedup, no
     reorder semantics)."""
-    df = spark.read.parquet(src_path)
+    df = read_parquet(spark, src_path)
     (
         df.repartition(*[F.col(c) for c in partition_cols])
         .write.mode("overwrite")
@@ -130,7 +132,5 @@ def compact_partitions(
 
 def events_by_date(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events table with its natural partition column attached."""
-    from .tables import load_table
-
     ev = load_table(spark, sf_dir, "events")
     return ev.withColumn("event_date", F.to_date("ts"))

@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .tables import read_parquet
+
 
 def write_range_sorted(
     df: DataFrame, path: str, sort_col: str, n_files: int
@@ -36,4 +38,4 @@ def write_range_sorted(
 
 
 def read_sorted(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .tables import read_parquet
+
 Z_BITS = 8  # per-dimension resolution: 2^8 cells per axis
 
 
@@ -92,4 +94,4 @@ def write_zordered(
 
 
 def read_zordered(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources import load_table
+from ..sources.tables import read_parquet
 
 N_STREAM_CHUNKS = 4
 
@@ -95,14 +96,14 @@ def run_snapshot_maintenance(
         session = batch_df.sparkSession
         latest = _latest_per_user(batch_df)
         if state["dir"] is not None:
-            prev = session.read.parquet(state["dir"])
+            prev = read_parquet(session, state["dir"])
             latest = _latest_per_user(prev.unionByName(latest))
         out = os.path.join(work_dir, f"snap_v{batch_id}")
         latest.write.mode("overwrite").parquet(out)
         state["dir"] = out
         state["batches"] += 1
 
-    schema = spark.read.parquet(in_dir).schema
+    schema = read_parquet(spark, in_dir).schema
     q = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

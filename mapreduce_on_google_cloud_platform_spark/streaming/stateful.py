@@ -226,11 +226,10 @@ CAP_OUTPUT_SCHEMA = StructType(
 
 def documents_stream(spark: SparkSession, sf_dir: str):
     """readStream twin of the documents loader."""
-    import os
-
+    from ..sources.tables import read_parquet, table_path
     from .windows import _table_stream_dir
 
-    static = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    static = read_parquet(spark, table_path(sf_dir, "documents"))
     return spark.readStream.schema(static.schema).parquet(
         _table_stream_dir(sf_dir, "documents")
     )

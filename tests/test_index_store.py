@@ -90,3 +90,37 @@ def test_materialized_builds_once_and_rereads(tmp_path, spark, monkeypatch):
     # a version bump forces a rebuild
     materialized(spark, SF_SMOKE, "probe_test", "v2", build)
     assert len(calls) == 2
+
+
+def test_materialized_schema_equals_inference(tmp_path, spark, monkeypatch):
+    """The store's reads go through ``read_parquet``: a re-read served
+    from the cached schema matches a fresh schema-inferring read."""
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "store"))
+
+    def build(s, d):
+        return s.range(5).selectExpr("id AS v", "CAST(id AS string) AS w")
+
+    materialized(spark, SF_SMOKE, "schema_test", "v1", build)
+    df = materialized(spark, SF_SMOKE, "schema_test", "v1", build)
+    path = index_path(SF_SMOKE, "schema_test", "v1")
+    assert df.schema == spark.read.parquet(path).schema
+
+
+def test_failed_build_leaves_no_partial_copies(tmp_path, spark, monkeypatch):
+    """A build whose write fails mid-job must not strand its stage/tmp
+    directory in the persistent store."""
+    import pytest
+
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "store"))
+
+    def build(s, d):
+        return s.range(10).selectExpr(
+            "CAST(IF(id = 7, raise_error('boom'), id) AS bigint) AS v"
+        )
+
+    with pytest.raises(Exception, match="boom"):
+        materialized(spark, SF_SMOKE, "failing_test", "v1", build)
+    store = tmp_path / "store"
+    leftovers = [p.name for p in store.rglob("*") if ".stage." in p.name or ".tmp." in p.name]
+    assert leftovers == []
+    assert not os.path.exists(index_path(SF_SMOKE, "failing_test", "v1"))
